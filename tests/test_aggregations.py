@@ -80,6 +80,23 @@ def test_stdev(sess):
     assert out.collect()[0]["sd"] == pytest.approx(1.0)
 
 
+def test_ungrouped_release_over_no_rows_is_filled(sess):
+    # Every moment is filled before noise, with or without group columns:
+    # a sum over no rows is 0, never NULL.
+    def one(q):
+        [r] = sess.evaluate(q, INF).collect()
+        return r[0]
+
+    def empty():
+        return QueryBuilder("t").filter("B > 100")
+
+    assert one(empty().sum("X", 0, 2)) == 0.0
+    assert one(empty().sum("B", 0, 10)) == 0
+    assert one(empty().average("X", 0, 3)) == pytest.approx(1.5)
+    assert one(empty().variance("X", 0, 3)) == 0.0
+    assert one(empty().stdev("X", 0, 3)) == 0.0
+
+
 def test_count_distinct(sess):
     ks = KeySet.from_dict({"A": ["0", "1"]})
     out = sess.evaluate(

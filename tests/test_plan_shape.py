@@ -149,6 +149,37 @@ def test_small_keyset_still_broadcast(li_sess):
     assert _plan(out).count("BroadcastHashJoin") >= 2
 
 
+@pytest.mark.parametrize(
+    "kind, draws",
+    [("count", 1), ("count_distinct", 1), ("sum", 1),
+     ("average", 2), ("variance", 3), ("stdev", 3)],
+)
+def test_release_noise_is_one_python_node(li_sess, kind, draws):
+    # All of a release's noise is one projection, which Spark evaluates
+    # in a single ArrowEvalPython node holding one sampler per moment.
+    import re
+
+    from tumult_analytics_spark.plans.compiler import compile_measurement
+    from tumult_analytics_spark.plans.rewrite import rewrite
+
+    ks = KeySet.from_dict({"l_returnflag": ["A", "N", "R"]})
+    g = QueryBuilder("lineitem").groupby(ks)
+    query = {
+        "count": lambda: g.count(),
+        "count_distinct": lambda: g.count_distinct(["l_partkey"]),
+        "sum": lambda: g.sum("l_quantity", 0, 50),
+        "average": lambda: g.average("l_quantity", 0, 50),
+        "variance": lambda: g.variance("l_quantity", 0, 50),
+        "stdev": lambda: g.stdev("l_quantity", 0, 50),
+    }[kind]()
+    ctx = li_sess._context()
+    expr = rewrite(query.expr, ctx.catalog)
+    plan = _plan(compile_measurement(expr, ctx, PureDPBudget(1)).df)
+    nodes = [line for line in plan.splitlines() if "ArrowEvalPython" in line]
+    assert len(nodes) == 1, nodes
+    assert len(re.findall(r"\b_(?:geo|lap|gau|dgau)\(", nodes[0])) == draws, nodes
+
+
 def test_simhash_plan_is_arrow_batched_no_shuffle(li_sess, spark):
     # The md5 simhash is an Arrow-batched kernel (the Catalyst explode +
     # 60-accumulator aggregate measured ~6x slower, see simhash

@@ -75,8 +75,8 @@ def main() -> None:
             if ev.get("Event") == "SparkListenerStageCompleted":
                 si = ev["Stage Info"]
                 sid = si["Stage ID"]
-                t0 = si.get("Submission Time", 0)
-                t1 = si.get("Completion Time", 0)
+                t0 = si.get("Submission Time")
+                t1 = si.get("Completion Time")
                 acc = {
                     a["Name"]: a.get("Value", 0)
                     for a in si.get("Accumulables", [])
@@ -90,8 +90,13 @@ def main() -> None:
                         return 0
 
                 stages[sid] = {
-                    "wall_s": round((t1 - t0) / 1000.0, 2),
-                    "tasks": si.get("Number of Tasks"),
+                    # A stage without both timestamps has no wall time.
+                    "wall_s": (
+                        round((t1 - t0) / 1000.0, 2)
+                        if t0 is not None and t1 is not None
+                        else None
+                    ),
+                    "tasks": si.get("Number of Tasks") or 0,
                     "name": si.get("Stage Name", "")[:80],
                     "details": si.get("Details", "").split("\n")[0][:120],
                     "sh_read_mb": num(
@@ -115,10 +120,11 @@ def main() -> None:
                     // 10**3,
                     "gc_s": num("internal.metrics.jvmGCTime") // 10**3,
                 }
-    for sid in sorted(stages, key=lambda s: -stages[s]["wall_s"]):
+    for sid in sorted(stages, key=lambda s: -(stages[s]["wall_s"] or 0.0)):
         s = stages[sid]
+        wall = "     n/a" if s["wall_s"] is None else f"{s['wall_s']:8.2f}"
         print(
-            f"stage {sid:3d} wall {s['wall_s']:8.2f}s tasks {s['tasks']:4d} "
+            f"stage {sid:3d} wall {wall}s tasks {s['tasks']:4d} "
             f"cpu {s['cpu_s']:5d}s run {s['run_s']:5d}s gc {s['gc_s']:4d}s "
             f"shR {s['sh_read_mb']:6d}M shW {s['sh_write_mb']:6d}M "
             f"spill {s['spill_disk_mb']:6d}M | {s['name']}"

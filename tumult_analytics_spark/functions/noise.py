@@ -17,6 +17,13 @@ Mechanisms:
 Scale conventions (d = sensitivity):
 - PureDP/ApproxDP: geometric/laplace b = d / epsilon.
 - zCDP: (discrete) gaussian sigma^2 = d^2 / (2 rho).
+
+One projection per release: :func:`add_noise` adds all of a release's
+noise in ONE ``withColumns``. Spark batches the independent sampler UDFs
+of one projection into a single ArrowEvalPython node, so a release with
+k noisy columns costs one Python node, not k. Each UDF reference is one
+nondeterministic draw per row, which a later filter or select on the
+noisy column reuses rather than redraws.
 """
 
 from __future__ import annotations
@@ -25,7 +32,7 @@ import math
 import secrets
 from dataclasses import dataclass
 from enum import Enum
-from typing import Iterator, List, Optional
+from typing import Mapping, Optional, Tuple
 
 import numpy as np
 import pandas as pd
@@ -86,10 +93,6 @@ def _sample_two_sided_geometric(rng, b: float, n: int) -> np.ndarray:
     return (g1 - g2).astype(np.int64)
 
 
-def _sample_discrete_laplace(rng, t: float, n: int) -> np.ndarray:
-    return _sample_two_sided_geometric(rng, t, n)
-
-
 def _sample_discrete_gaussian(rng, sigma_sq: float, n: int) -> np.ndarray:
     """CKS20 rejection sampler: propose discrete Laplace(t), accept with
     probability exp(-(|x| - sigma^2/t)^2 / (2 sigma^2))."""
@@ -98,7 +101,7 @@ def _sample_discrete_gaussian(rng, sigma_sq: float, n: int) -> np.ndarray:
     filled = 0
     while filled < n:
         m = max(64, 2 * (n - filled))
-        x = _sample_discrete_laplace(rng, t, m)
+        x = _sample_two_sided_geometric(rng, t, m)
         accept_p = np.exp(-((np.abs(x) - sigma_sq / t) ** 2) / (2.0 * sigma_sq))
         keep = rng.random(m) < accept_p
         kept = x[keep]
@@ -153,11 +156,14 @@ def noise_column(mechanism: NoiseMechanism, scale: float) -> Optional[Column]:
     raise ValueError(f"Unknown mechanism {mechanism}")
 
 
-def with_noise(
-    df: DataFrame, column: str, mechanism: NoiseMechanism, scale: float
+def add_noise(
+    df: DataFrame, noise: Mapping[str, Tuple[NoiseMechanism, float]]
 ) -> DataFrame:
-    """Add noise to ``column`` in place (no-op when scale == 0)."""
-    noise = noise_column(mechanism, scale)
-    if noise is None:
-        return df
-    return df.withColumn(column, F.col(column) + noise)
+    """Add fresh noise to each column of ``noise`` (column -> (mechanism,
+    scale)) in one projection; zero-scale columns are left unchanged."""
+    noisy = {}
+    for col, (mechanism, scale) in noise.items():
+        draw = noise_column(mechanism, scale)
+        if draw is not None:
+            noisy[col] = F.col(col) + draw
+    return df.withColumns(noisy) if noisy else df

@@ -4,9 +4,9 @@ Five families, each scale-designed:
 
 - exact:        hash groupBy (one shuffle, map-side combine)
 - MinHash+LSH:  shingle -> minhash signature -> band buckets -> bucket join;
-                all signature math is Catalyst higher-order functions
-                (JVM-side, no Python), candidates verified by signature
-                similarity. The classic Broder/LSH construction.
+                signatures come from an Arrow-batched numpy kernel,
+                candidates verified by signature similarity. The classic
+                Broder/LSH construction.
 - SimHash:      64-bit sign-of-weighted-sum fingerprint via a vectorized
                 pandas UDF (numpy bit tricks), near-dups = small Hamming
                 distance within prefix buckets.
@@ -39,59 +39,6 @@ def dedup_exact(df: DataFrame, columns: Optional[Sequence[str]] = None) -> DataF
     return df.dropDuplicates(list(columns) if columns else None)
 
 
-def _shingle_hashes(text_col: Column, k: int) -> Column:
-    """Array of xxhash64 values of the k-char shingles of ``text_col``.
-
-    Pure Catalyst: sequence + transform + substring + xxhash64 — runs
-    JVM-side inside whole-stage codegen, no Python involved.
-    """
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(text_col) - (k - 1), F.lit(1))),
-        lambda i: F.xxhash64(F.substring(text_col, i, k)),
-    )
-
-
-def minhash_signatures_catalyst(
-    df: DataFrame,
-    text_column: str,
-    id_column: str,
-    num_hashes: int = 64,
-    shingle_size: int = 5,
-    seed: int = 42,
-) -> DataFrame:
-    """(id, signature array<long>) via pure Catalyst higher-order functions.
-
-    Kept as the zero-Python reference path, but HOF lambdas are interpreted
-    (outside whole-stage codegen): measured ~1.4 ms/doc at ~300 chars/doc —
-    ~9x slower than the vectorized kernel in ``minhash_signatures``.
-    """
-    import random
-
-    rnd = random.Random(seed)
-    coeffs = [
-        (rnd.randrange(1, _MERSENNE), rnd.randrange(0, _MERSENNE))
-        for _ in range(num_hashes)
-    ]
-    base = _shingle_hashes(F.col(text_column), shingle_size)
-    with_base = df.select(id_column, base.alias("__sh__"))
-
-    # NB: single-arg lambdas only — pyspark counts default-arg params as
-    # lambda arity, so closures must come from a factory function.
-    def _universal(a: int, b: int):
-        return lambda h: (
-            (F.lit(a) * F.pmod(h, F.lit(_MERSENNE)) + F.lit(b))
-            % F.lit(_MERSENNE)
-        )
-
-    sig = F.array(
-        *[
-            F.array_min(F.transform("__sh__", _universal(a, b)))
-            for a, b in coeffs
-        ]
-    )
-    return with_base.select(id_column, sig.alias("signature"))
-
-
 def minhash_signatures(
     df: DataFrame,
     text_column: str,
@@ -106,9 +53,10 @@ def minhash_signatures(
     sliding-window polynomial rolling hash over the UTF-8 bytes produces
     all shingle hashes in one numpy op, then the (shingles x num_hashes)
     universal-hash matrix is reduced with a single min. Measured ~0.15
-    ms/doc vs ~1.4 ms/doc for the interpreted Catalyst HOF equivalent
-    (``minhash_signatures_catalyst``) — the batched Python boundary wins
-    here because HOF lambdas never enter whole-stage codegen.
+    ms/doc vs ~1.4 ms/doc (at ~300 chars/doc) for the same signature
+    computed with Catalyst higher-order functions (transform/array_min
+    over the shingle hashes) — the batched Python boundary wins here
+    because HOF lambdas are interpreted, never whole-stage codegen.
     """
     import numpy as np
     import pandas as pd

@@ -10,7 +10,8 @@ Transformation/Measurement objects) with one Spark-first compile pass:
   _constraint_propagation.py);
 - aggregations compile to: [semi-join filter to keyset] -> groupBy().agg()
   (map-side partial aggregation) -> broadcast join with the keyset ->
-  noisy-zero fill -> noise column. The base-table scan is the only big
+  noisy-zero fill -> one noise projection (``_noisy_release``, shared by
+  every additive measurement). The base-table scan is the only big
   shuffle; the keyset side is always broadcast.
 
 Scale notes (100 TB): the semi-join against the keyset is a broadcast
@@ -25,7 +26,7 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass, field as dc_field, replace as dc_replace
 from fractions import Fraction
-from typing import Any, Callable, Dict, Iterator, List, Optional, Sequence, Tuple, Union
+from typing import Any, Callable, Dict, Iterator, List, NamedTuple, Optional, Sequence, Tuple, Union
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -45,7 +46,7 @@ from ..constraints import (
     truncate_max_rows_per_group_per_id,
     truncate_max_rows_per_id,
 )
-from ..functions.noise import NoiseInfo, NoiseMechanism, noise_column
+from ..functions.noise import NoiseInfo, NoiseMechanism, add_noise
 from ..keyset import KeySet
 from ..protected import (
     AddMaxRows,
@@ -1303,18 +1304,20 @@ def _keyset_attach(
     (noisy zeros for missing groups, per reference semantics:
     noise-after-join, not noise-then-join). For huge or unknown-size
     keysets this is a shuffled join and AQE picks the runtime strategy.
+    The fill also applies without group columns, where an aggregate over
+    no rows (e.g. a sum) is NULL.
     """
     cols = list(keys.columns())
-    if not cols:
-        return agg
-    kdf = keys.dataframe()
-    joined = nullsafe_equi_join(
-        kdf, agg, cols, how="left", broadcast_right=_keyset_broadcastable(keys)
-    )
-    fills = {
-        c: F.coalesce(F.col(c), F.lit(v)) for c, v in fill.items() if v is not None
-    }
-    return joined.withColumns(fills) if fills else joined
+    if cols:
+        agg = nullsafe_equi_join(
+            keys.dataframe(),
+            agg,
+            cols,
+            how="left",
+            broadcast_right=_keyset_broadcastable(keys),
+        )
+    fills = {c: F.coalesce(F.col(c), F.lit(v)) for c, v in fill.items()}
+    return agg.withColumns(fills) if fills else agg
 
 
 def _clamp(col: F.Column, ctype: ColumnType, low, high) -> F.Column:
@@ -1388,83 +1391,108 @@ def compile_measurement(
     raise TypeError(f"Not a measurement node: {type(expr).__name__}")
 
 
-def _prep(expr, ctx: CompileContext, bspec: BudgetSpec):
+class _Prepared(NamedTuple):
+    t: CompiledTable
+    df: DataFrame
+    gcols: List[str]
+    keys: KeySet
+    l1: float
+    l2: float
+
+
+def _prep(expr, ctx: CompileContext, bspec: BudgetSpec) -> _Prepared:
     """Common head: compile child, truncate IDs, filter to keyset."""
     t = compile_transform(expr.child, ctx)
     keys: KeySet = expr.groupby_keys
     gcols = list(keys.columns())
     df, l1, l2 = _truncate_for_measurement(t, gcols, bspec.kind)
-    df = _keyset_filter(df, keys)
-    return t, df, gcols, keys, l1, l2
+    return _Prepared(t, _keyset_filter(df, keys), gcols, keys, l1, l2)
+
+
+#: One noisy quantity of a release: (aggregate, sensitivity per changed
+#: row, integer-valued?).
+Moment = Tuple[F.Column, float, bool]
+
+
+def _noisy_release(
+    expr, prep: _Prepared, bspec: BudgetSpec, moments: Dict[str, Moment]
+) -> MeasurementResult:
+    """The noisy-release path of every additive measurement: one
+    groupBy().agg over all moments -> keyset attach, filling each moment
+    with 0 / 0.0 -> budget split evenly across the moments (sequential
+    composition) -> all noise in one projection -> cast each moment to
+    long / double. NoiseInfos follow the moments' order."""
+    agg = _groupby(prep.df, prep.gcols).agg(
+        *(a.alias(c) for c, (a, _, _) in moments.items())
+    )
+    res = _keyset_attach(
+        agg, prep.keys, {c: 0 if i else 0.0 for c, (_, _, i) in moments.items()}
+    )
+    share = bspec.split(len(moments))
+    noise: Dict[str, Tuple[NoiseMechanism, float]] = {}
+    for c, (_, sens, integer_valued) in moments.items():
+        mech = resolve_mechanism(expr.mechanism, share, integer_valued)
+        noise[c] = (mech, noise_scale(mech, share, prep.l1 * sens, prep.l2 * sens))
+    res = add_noise(res, noise).withColumns(
+        {
+            c: F.col(c).cast("long" if i else "double")
+            for c, (_, _, i) in moments.items()
+        }
+    )
+    return MeasurementResult(res, [NoiseInfo(m, s) for m, s in noise.values()])
 
 
 def _compile_count(
     expr: E.GroupByCount, ctx: CompileContext, bspec: BudgetSpec
 ) -> MeasurementResult:
-    t, df, gcols, keys, l1, l2 = _prep(expr, ctx, bspec)
-    out = expr.output_column
-    agg = _groupby(df, gcols).agg(F.count(F.lit(1)).alias(out))
-    res = _keyset_attach(agg, keys, {out: 0})
-    mech = resolve_mechanism(expr.mechanism, bspec, integer_valued=True)
-    scale = noise_scale(mech, bspec, l1, l2)
-    noise = noise_column(mech, scale)
-    if noise is not None:
-        res = res.withColumn(out, F.col(out) + noise)
-    res = res.withColumn(out, F.col(out).cast("long"))
-    return MeasurementResult(res, [NoiseInfo(mech, scale)])
+    prep = _prep(expr, ctx, bspec)
+    return _noisy_release(
+        expr, prep, bspec, {expr.output_column: (F.count(F.lit(1)), 1, True)}
+    )
 
 
 def _compile_count_distinct(
     expr: E.GroupByCountDistinct, ctx: CompileContext, bspec: BudgetSpec
 ) -> MeasurementResult:
-    t, df, gcols, keys, l1, l2 = _prep(expr, ctx, bspec)
-    out = expr.output_column
+    prep = _prep(expr, ctx, bspec)
     # Exact distinct, then noise (NOT approx_count_distinct): dedup over
     # the counted columns + group columns, then a plain count.
     distinct_cols = (
-        list(dict.fromkeys([*gcols, *expr.columns_to_count]))
+        list(dict.fromkeys([*prep.gcols, *expr.columns_to_count]))
         if expr.columns_to_count
-        else list(df.columns)
+        else list(prep.df.columns)
     )
-    deduped = df.dropDuplicates(distinct_cols)
-    agg = _groupby(deduped, gcols).agg(F.count(F.lit(1)).alias(out))
-    res = _keyset_attach(agg, keys, {out: 0})
-    mech = resolve_mechanism(expr.mechanism, bspec, integer_valued=True)
-    scale = noise_scale(mech, bspec, l1, l2)
-    noise = noise_column(mech, scale)
-    if noise is not None:
-        res = res.withColumn(out, F.col(out) + noise)
-    res = res.withColumn(out, F.col(out).cast("long"))
-    return MeasurementResult(res, [NoiseInfo(mech, scale)])
+    deduped = prep._replace(df=prep.df.dropDuplicates(distinct_cols))
+    return _noisy_release(
+        expr, deduped, bspec, {expr.output_column: (F.count(F.lit(1)), 1, True)}
+    )
 
 
 def _compile_sum(
     expr: E.GroupByBoundedSum, ctx: CompileContext, bspec: BudgetSpec
 ) -> MeasurementResult:
-    t, df, gcols, keys, l1, l2 = _prep(expr, ctx, bspec)
-    out = expr.output_column
-    cs = t.schema
-    ctype = cs[expr.measure_column].column_type
+    prep = _prep(expr, ctx, bspec)
+    ctype = prep.t.schema[expr.measure_column].column_type
     integer_valued = (
         ctype is ColumnType.INTEGER
         and float(expr.low).is_integer()
         and float(expr.high).is_integer()
     )
     clamped = _clamp(F.col(expr.measure_column), ctype, expr.low, expr.high)
-    agg = _groupby(df, gcols).agg(F.sum(clamped).alias(out))
-    zero: Any = 0 if integer_valued else 0.0
-    res = _keyset_attach(agg, keys, {out: zero})
-    res = res.withColumn(out, F.coalesce(F.col(out), F.lit(zero)))
     sens = max(abs(float(expr.low)), abs(float(expr.high)))
-    mech = resolve_mechanism(expr.mechanism, bspec, integer_valued)
-    scale = noise_scale(mech, bspec, l1 * sens, l2 * sens)
-    noise = noise_column(mech, scale)
-    if noise is not None:
-        res = res.withColumn(out, F.col(out) + noise)
-    res = res.withColumn(
-        out, F.col(out).cast("long" if integer_valued else "double")
+    return _noisy_release(
+        expr, prep, bspec, {expr.output_column: (F.sum(clamped), sens, integer_valued)}
     )
-    return MeasurementResult(res, [NoiseInfo(mech, scale)])
+
+
+def _centred(expr, t: CompiledTable) -> Tuple[float, float, F.Column]:
+    """(midpoint, half range, clamped measure minus midpoint as double)."""
+    lo, hi = float(expr.low), float(expr.high)
+    half_range = (hi - lo) / 2.0
+    mid = lo + half_range
+    ctype = t.schema[expr.measure_column].column_type
+    clamped = _clamp(F.col(expr.measure_column), ctype, expr.low, expr.high)
+    return mid, half_range, clamped.cast("double") - F.lit(mid)
 
 
 def _compile_average(
@@ -1472,45 +1500,21 @@ def _compile_average(
 ) -> MeasurementResult:
     """avg = midpoint + noisy_sum(x - midpoint) / max(noisy_count, 1);
     budget split evenly between the two noisy quantities."""
-    t, df, gcols, keys, l1, l2 = _prep(expr, ctx, bspec)
-    out = expr.output_column
-    cs = t.schema
-    ctype = cs[expr.measure_column].column_type
-    lo, hi = float(expr.low), float(expr.high)
-    mid = lo + (hi - lo) / 2.0
-    clamped = _clamp(F.col(expr.measure_column), ctype, expr.low, expr.high)
-    dev = clamped.cast("double") - F.lit(mid)
-    agg = _groupby(df, gcols).agg(
-        F.sum(dev).alias("__sdev__"), F.count(F.lit(1)).alias("__n__")
-    )
-    res = _keyset_attach(agg, keys, {"__sdev__": 0.0, "__n__": 0})
-    res = res.withColumns(
+    prep = _prep(expr, ctx, bspec)
+    mid, half_range, dev = _centred(expr, prep.t)
+    rel = _noisy_release(
+        expr,
+        prep,
+        bspec,
         {
-            "__sdev__": F.coalesce(F.col("__sdev__"), F.lit(0.0)),
-            "__n__": F.coalesce(F.col("__n__"), F.lit(0)),
-        }
+            "__sdev__": (F.sum(dev), half_range, False),
+            "__n__": (F.count(F.lit(1)), 1, True),
+        },
     )
-    half = bspec.split(2)
-    sum_sens = (hi - lo) / 2.0
-    sum_mech = resolve_mechanism(expr.mechanism, half, integer_valued=False)
-    count_mech = resolve_mechanism(expr.mechanism, half, integer_valued=True)
-    sum_scale = noise_scale(sum_mech, half, l1 * sum_sens, l2 * sum_sens)
-    count_scale = noise_scale(count_mech, half, l1, l2)
-    for col, mech, scale in [
-        ("__sdev__", sum_mech, sum_scale),
-        ("__n__", count_mech, count_scale),
-    ]:
-        noise = noise_column(mech, scale)
-        if noise is not None:
-            res = res.withColumn(col, F.col(col) + noise)
-    res = res.withColumn(
-        out,
-        F.lit(mid)
-        + F.col("__sdev__") / F.greatest(F.col("__n__").cast("double"), F.lit(1.0)),
-    ).drop("__sdev__", "__n__")
-    return MeasurementResult(
-        res,
-        [NoiseInfo(sum_mech, sum_scale), NoiseInfo(count_mech, count_scale)],
+    n = F.greatest(F.col("__n__").cast("double"), F.lit(1.0))
+    avg = F.lit(mid) + F.col("__sdev__") / n
+    return dc_replace(
+        rel, df=rel.df.withColumn(expr.output_column, avg).drop("__sdev__", "__n__")
     )
 
 
@@ -1519,58 +1523,30 @@ def _compile_variance(
 ) -> MeasurementResult:
     """Sample variance from noisy (sum dev, sum dev^2, count); budget split
     three ways. Stdev = sqrt(max(variance, 0))."""
-    is_stdev = isinstance(expr, E.GroupByBoundedStdev)
-    t, df, gcols, keys, l1, l2 = _prep(expr, ctx, bspec)
-    out = expr.output_column
-    cs = t.schema
-    ctype = cs[expr.measure_column].column_type
-    lo, hi = float(expr.low), float(expr.high)
-    mid = lo + (hi - lo) / 2.0
-    clamped = _clamp(F.col(expr.measure_column), ctype, expr.low, expr.high)
-    dev = clamped.cast("double") - F.lit(mid)
-    agg = _groupby(df, gcols).agg(
-        F.sum(dev).alias("__sd__"),
-        F.sum(dev * dev).alias("__sdd__"),
-        F.count(F.lit(1)).alias("__n__"),
-    )
-    res = _keyset_attach(agg, keys, {"__sd__": 0.0, "__sdd__": 0.0, "__n__": 0})
-    res = res.withColumns(
+    prep = _prep(expr, ctx, bspec)
+    _, half_range, dev = _centred(expr, prep.t)
+    rel = _noisy_release(
+        expr,
+        prep,
+        bspec,
         {
-            "__sd__": F.coalesce(F.col("__sd__"), F.lit(0.0)),
-            "__sdd__": F.coalesce(F.col("__sdd__"), F.lit(0.0)),
-            "__n__": F.coalesce(F.col("__n__"), F.lit(0)),
-        }
+            "__sd__": (F.sum(dev), half_range, False),
+            "__sdd__": (F.sum(dev * dev), half_range * half_range, False),
+            "__n__": (F.count(F.lit(1)), 1, True),
+        },
     )
-    third = bspec.split(3)
-    half_range = (hi - lo) / 2.0
-    sd_sens = half_range
-    sdd_sens = half_range * half_range
-    mech_f = resolve_mechanism(expr.mechanism, third, integer_valued=False)
-    mech_i = resolve_mechanism(expr.mechanism, third, integer_valued=True)
-    sd_scale = noise_scale(mech_f, third, l1 * sd_sens, l2 * sd_sens)
-    sdd_scale = noise_scale(mech_f, third, l1 * sdd_sens, l2 * sdd_sens)
-    n_scale = noise_scale(mech_i, third, l1, l2)
-    for col, mech, scale in [
-        ("__sd__", mech_f, sd_scale),
-        ("__sdd__", mech_f, sdd_scale),
-        ("__n__", mech_i, n_scale),
-    ]:
-        noise = noise_column(mech, scale)
-        if noise is not None:
-            res = res.withColumn(col, F.col(col) + noise)
     n = F.greatest(F.col("__n__").cast("double"), F.lit(1.0))
     nm1 = F.greatest(F.col("__n__").cast("double") - F.lit(1.0), F.lit(1.0))
     var = (F.col("__sdd__") - (F.col("__sd__") * F.col("__sd__")) / n) / nm1
     var = F.greatest(var, F.lit(0.0))
-    res = res.withColumn(out, F.sqrt(var) if is_stdev else var).drop(
-        "__sd__", "__sdd__", "__n__"
+    if isinstance(expr, E.GroupByBoundedStdev):
+        var = F.sqrt(var)
+    return dc_replace(
+        rel,
+        df=rel.df.withColumn(expr.output_column, var).drop(
+            "__sd__", "__sdd__", "__n__"
+        ),
     )
-    infos = [
-        NoiseInfo(mech_f, sd_scale),
-        NoiseInfo(mech_f, sdd_scale),
-        NoiseInfo(mech_i, n_scale),
-    ]
-    return MeasurementResult(res, infos)
 
 
 #: Number of histogram bins the DP quantile uses per group.
@@ -1689,13 +1665,9 @@ def _compile_quantiles(
 
     if gcols:
         per_group = counts.groupBy(*gcols).applyInPandas(em_quantiles, out_schema)
-        res = _keyset_attach(per_group, keys, {})
-        # Missing groups: empty data -> all bins tie -> argmax picks bin 0.
-        for q, out in zip(qs, outs):
-            res = res.withColumn(
-                out,
-                F.coalesce(F.col(out), F.lit(_empty_quantile_value(q, lo, hi, nb))),
-            )
+        # Missing groups: empty data -> all bins tie at utility 0 -> argmax
+        # picks bin 0 -> its midpoint.
+        res = _keyset_attach(per_group, keys, {o: lo + 0.5 * width for o in outs})
     else:
         pdf = counts.toPandas()
         res_pdf = em_quantiles((), pdf)
@@ -1705,13 +1677,6 @@ def _compile_quantiles(
         for _ in qs
     ]
     return MeasurementResult(res, infos)
-
-
-def _empty_quantile_value(q: float, lo: float, hi: float, nb: int) -> float:
-    """Deterministic value for groups with no data at infinite budget: all
-    bins tie at utility 0, argmax picks bin 0 -> its midpoint."""
-    width = (hi - lo) / nb
-    return lo + 0.5 * width
 
 
 def _compile_get_groups(
@@ -1735,11 +1700,7 @@ def _compile_get_groups(
             f"({cs.id_column!r})"
         )
     cols = list(expr.columns) or [c for c in cs if c != cs.id_column]
-    df, l1, l2 = (
-        _truncate_for_measurement(t, cols, bspec.kind)
-        if t.is_ids
-        else (t.df, t.l1, t.l2)
-    )
+    df, l1, l2 = _truncate_for_measurement(t, cols, bspec.kind)
     counts = df.groupBy(*cols).agg(F.count(F.lit(1)).alias("__c__"))
     if bspec.infinite:
         res = counts.filter(F.col("__c__") >= 1).drop("__c__")
@@ -1754,9 +1715,7 @@ def _compile_get_groups(
     # over up to l1 new groups (union bound adds a factor l1). Solving
     # (l1/2)exp(-(tau-l1)/b) <= delta gives tau = l1 + b*ln(l1/(2*delta)).
     tau = max(1.0, l1 + b * math.log(l1 / (2.0 * delta)))
-    noisy = counts.withColumn(
-        "__c__", F.col("__c__") + noise_column(NoiseMechanism.GEOMETRIC, b)
-    )
+    noisy = add_noise(counts, {"__c__": (NoiseMechanism.GEOMETRIC, b)})
     res = noisy.filter(F.col("__c__") >= tau).drop("__c__")
     return MeasurementResult(res, [NoiseInfo(NoiseMechanism.GEOMETRIC, b)])
 
@@ -1767,11 +1726,7 @@ def _compile_get_bounds(
     """DP clamping-bound estimate via a noisy histogram over power-of-two
     magnitude bins; returns the smallest +-2^k covering ~95% of rows
     (reference behavior: +-128 for data 0..99)."""
-    t = compile_transform(expr.child, ctx)
-    keys = expr.groupby_keys
-    gcols = list(keys.columns())
-    df, l1, l2 = _truncate_for_measurement(t, gcols, bspec.kind)
-    df = _keyset_filter(df, keys)
+    t, df, gcols, keys, l1, l2 = _prep(expr, ctx, bspec)
     m = F.col(expr.measure_column).cast("double")
     # bin = ceil(log2(|x|)) for |x| > 1, else 0; sign-agnostic magnitude bin.
     mag = F.abs(m)
@@ -1782,10 +1737,7 @@ def _compile_get_bounds(
     counts = _groupby(binned, [*gcols, "__b__"]).agg(F.count(F.lit(1)).alias("__c__"))
     eps = bspec.epsilon if bspec.kind != "zcdp" else math.sqrt(8.0 * bspec.rho)
     scale = 0.0 if bspec.infinite else (2.0 * l1 / eps if eps > 0 else 0.0)
-    if scale > 0:
-        counts = counts.withColumn(
-            "__c__", F.col("__c__") + noise_column(NoiseMechanism.GEOMETRIC, scale)
-        )
+    counts = add_noise(counts, {"__c__": (NoiseMechanism.GEOMETRIC, scale)})
     lb, ub = expr.lower_bound_column, expr.upper_bound_column
 
     out_fields = [(c, t.df.schema[c].dataType) for c in gcols]

@@ -408,9 +408,6 @@ class Session:
         satisfy (epsilon, 0)-DP, so requesting (epsilon, delta) only
         deducts (epsilon, 0). Partition selection (get_groups / detected
         keysets) genuinely consumes delta and is exempt."""
-        from .budget import ApproxDPBudget
-        from .plans import expr as E
-
         if not isinstance(privacy_budget, ApproxDPBudget):
             return privacy_budget
         if privacy_budget.is_infinite():

@@ -97,15 +97,12 @@ def dp_windowed_counts(
 
     Noise is added per output row in the aggregated (small) stream, so
     the DP stage costs O(#windows), not O(#events)."""
-    from ..functions.noise import NoiseMechanism, noise_column
+    from ..functions.noise import NoiseMechanism, add_noise
 
     counts = windowed_event_counts(df, window=window, watermark=watermark)
     scale = max_rows_per_user_per_window / epsilon
-    noise = noise_column(NoiseMechanism.GEOMETRIC, scale)
-    out = counts.withColumn(
-        "n", (F.col("n") + (noise if noise is not None else F.lit(0))).cast("long")
-    )
-    return out.drop("sum_value")
+    out = add_noise(counts, {"n": (NoiseMechanism.GEOMETRIC, scale)})
+    return out.withColumn("n", F.col("n").cast("long")).drop("sum_value")
 
 
 def enrich_with_dimension(
