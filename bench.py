@@ -18,55 +18,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-    from pyspark.sql import SparkSession
-
-    # Input size drives the two knobs a human used to hand-set (SF1.md
-    # sf100 campaign). Driver memory must be fixed before the JVM
-    # starts, so size it here from the on-disk bytes: local mode folds
-    # a cluster's aggregate executor memory into one heap, and the
-    # 600M-row truncation-window shuffles at sf100 need ~5x the input
-    # bytes. Small sf keeps the old 16g.
-    disk_bytes = 0
-    for root, _dirs, files in os.walk(sf_dir):
-        for f in files:
-            try:
-                disk_bytes += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                pass
-    auto_mem = f"{min(64, max(16, (disk_bytes * 5) >> 30))}g"
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("tumult_analytics_spark-bench")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", auto_mem),
-        )
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # Shuffle partitions derived from scanned bytes (ceil(bytes * 4 /
-    # 256 MB), floored at core count): the default one-per-core spills
-    # at 600M-row shuffles (~19M rows/partition), and AQE coalesces
-    # any excess at small sf — no env var needed; SPARK_GRAFT_
-    # SHUFFLE_PARTITIONS remains as an explicit override.
-    env_parts = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-    if env_parts:
-        spark.conf.set("spark.sql.shuffle.partitions", env_parts)
-    else:
-        from tumult_analytics_spark.utils import configure_shuffle_partitions
-
-        configure_shuffle_partitions(
-            spark, [sf_dir], floor=max(int(cpus), 8)
-        )
+    spark = bench_session("tumult_analytics_spark-bench", sf_dir)
 
     import __spark_entry__ as entry
 
@@ -252,6 +204,63 @@ def main() -> None:
     print(json.dumps(headline))
     _write_full_artifact(payload, only)
     spark.stop()
+
+
+def bench_session(app: str, sf_dir: str, **extra_conf):
+    """The Spark session of the bench and the tools in ``tools/``:
+    local[$SPARK_GRAFT_CPUS] with AQE, UTC and nanosecond timestamps read
+    as longs, plus ``extra_conf`` (pass dotted keys as
+    ``**{"spark.eventLog.enabled": "true"}``).
+
+    Input size drives the two knobs a human used to hand-set (SF1.md
+    sf100 campaign). Driver memory must be fixed before the JVM starts,
+    so it is sized here from the on-disk bytes: local mode folds a
+    cluster's aggregate executor memory into one heap, and the 600M-row
+    truncation-window shuffles at sf100 need ~5x the input bytes. It is
+    floored at 16g, but never above the host's physical memory;
+    $SPARK_GRAFT_DRIVER_MEM overrides it.
+
+    Shuffle partitions are derived from scanned bytes (ceil(bytes * 4 /
+    256 MB), floored at the core count): the default one-per-core spills
+    at 600M-row shuffles (~19M rows/partition), and AQE coalesces any
+    excess at small sf. $SPARK_GRAFT_SHUFFLE_PARTITIONS overrides it.
+    """
+    from pyspark.sql import SparkSession
+
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    disk_bytes = 0
+    for root, _dirs, files in os.walk(sf_dir):
+        for f in files:
+            try:
+                disk_bytes += os.path.getsize(os.path.join(root, f))
+            except OSError:
+                pass
+    host_gb = (os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")) >> 30
+    auto_mem = f"{min(64, max(16, (disk_bytes * 5) >> 30), host_gb)}g"
+    spark = (
+        SparkSession.builder.master(f"local[{cpus}]")
+        .appName(app)
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", auto_mem),
+        )
+        .config("spark.ui.enabled", "false")
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.sql.session.timeZone", "UTC")
+        .config(map=extra_conf)
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    env_parts = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+    if env_parts:
+        spark.conf.set("spark.sql.shuffle.partitions", env_parts)
+    else:
+        from tumult_analytics_spark.utils import configure_shuffle_partitions
+
+        configure_shuffle_partitions(spark, [sf_dir], floor=max(int(cpus), 8))
+    return spark
 
 
 def _budget_deviations(

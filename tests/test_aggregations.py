@@ -226,3 +226,63 @@ def test_get_bounds(spark):
     [r] = out.collect()
     # reference doc: +-128 for data 0..99
     assert r["x_lower_bound"] == -128.0 and r["x_upper_bound"] == 128.0
+
+
+def test_empty_group_median_is_drawn(spark):
+    # A KeySet group with no rows goes through the exponential mechanism
+    # like any other: at finite epsilon its median varies across draws,
+    # at infinite budget it is the argmax over all-zero utilities, bin 0.
+    df = spark.createDataFrame(
+        pd.DataFrame({"g": ["a"] * 20, "x": [float(i) for i in range(20)]})
+    )
+    s = Session.from_dataframe(PureDPBudget(float("inf")), "u", df, AddOneRow())
+    ks = KeySet.from_dict({"g": ["a", "z"]})
+    q = QueryBuilder("u").groupby(ks).median("x", 0, 100, name="m")
+    draws = {
+        rows_dict(s.evaluate(q, PureDPBudget(1)), "g", "m")["z"] for _ in range(6)
+    }
+    assert len(draws) > 1, draws
+    assert rows_dict(s.evaluate(q, INF), "g", "m")["z"] == pytest.approx(100 / 512 / 2)
+
+
+def test_grouped_get_bounds_covers_keyset(spark):
+    # Every KeySet group gets bounds, a group with no rows included.
+    df = spark.createDataFrame(
+        pd.DataFrame({"g": ["a"] * 30, "x": [float(i) for i in range(30)]})
+    )
+    s = Session.from_dataframe(PureDPBudget(float("inf")), "u", df, AddOneRow())
+    ks = KeySet.from_dict({"g": ["a", "z"]})
+    q = QueryBuilder("u").groupby(ks).get_bounds("x", "lo", "hi")
+    for budget in (INF, PureDPBudget(1)):
+        rows = s.evaluate(q, budget).collect()
+        assert sorted(r["g"] for r in rows) == ["a", "z"]
+        assert all(r["lo"] is not None and r["hi"] is not None for r in rows), rows
+    got = {r["g"]: (r["lo"], r["hi"]) for r in s.evaluate(q, INF).collect()}
+    assert got == {"a": (-32.0, 32.0), "z": (-1.0, 1.0)}
+
+
+@pytest.mark.parametrize(
+    "make, name",
+    [
+        (lambda g: g.quantile("X", 0.5, 0, 4), "X_quantile(0.5)"),
+        (lambda g: g.count(name="c.n"), "c.n"),
+        (lambda g: QueryBuilder("t").sum("X", 0, 4, name="s.x"), "s.x"),
+        (lambda g: g.count(name="c.n").suppress(2), "c.n"),
+    ],
+    ids=["quantile_default_name", "count", "ungrouped_sum", "suppress"],
+)
+@pytest.mark.parametrize("budget", [INF, PureDPBudget(1)], ids=["inf", "finite"])
+def test_dotted_output_names(spark, make, name, budget):
+    # A '.' in an output column name is part of the name, never a
+    # struct-field access.
+    df = spark.createDataFrame(
+        pd.DataFrame({"A": ["0", "1", "1", "1"], "X": [0.0, 1.0, 2.0, 3.0]})
+    )
+    s = Session.from_dataframe(PureDPBudget(float("inf")), "t", df, AddOneRow())
+    g = QueryBuilder("t").groupby(KeySet.from_dict({"A": ["0", "1"]}))
+    out = s.evaluate(make(g), budget)
+    assert name in out.columns
+    rows = out.collect()
+    assert all(r[name] is not None for r in rows), rows
+    if budget is INF:
+        assert rows

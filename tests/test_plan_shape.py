@@ -180,6 +180,55 @@ def test_release_noise_is_one_python_node(li_sess, kind, draws):
     assert len(re.findall(r"\b_(?:geo|lap|gau|dgau)\(", nodes[0])) == draws, nodes
 
 
+def _histogram_query(kind: str, grouped: bool):
+    q = QueryBuilder("lineitem")
+    if grouped:
+        q = q.groupby(KeySet.from_dict({"l_returnflag": ["A", "N", "R"]}))
+    if kind == "median":
+        return q.median("l_quantity", 0, 50)
+    return q.get_bounds("l_quantity")
+
+
+@pytest.mark.parametrize("kind", ["median", "get_bounds"])
+def test_ungrouped_histogram_compile_starts_no_job(li_sess, spark, kind):
+    # Compiling a histogram measurement, or asking for its noise info,
+    # stays lazy without group columns too: no eager collect of the
+    # histogram to the driver.
+    from tumult_analytics_spark.plans.compiler import compile_measurement
+    from tumult_analytics_spark.plans.rewrite import rewrite
+
+    sc = spark.sparkContext
+    group = f"histogram-compile-{kind}"
+    query = _histogram_query(kind, grouped=False)
+    sc.setJobGroup(group, group)
+    try:
+        ctx = li_sess._context()
+        compile_measurement(rewrite(query.expr, ctx.catalog), ctx, PureDPBudget(1))
+        li_sess._noise_info(query, PureDPBudget(1))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+@pytest.mark.parametrize("grouped", [True, False], ids=["grouped", "total"])
+@pytest.mark.parametrize("kind, nodes", [("median", 1), ("get_bounds", 2)])
+def test_histogram_release_python_nodes(li_sess, kind, nodes, grouped):
+    # A finite-budget quantile runs its picker in one Python node; a
+    # get_bounds adds one more for the noise on its bin counts. The
+    # ungrouped plan has the same shape as the grouped one.
+    import re
+
+    from tumult_analytics_spark.plans.compiler import compile_measurement
+    from tumult_analytics_spark.plans.rewrite import rewrite
+
+    ctx = li_sess._context()
+    expr = rewrite(_histogram_query(kind, grouped).expr, ctx.catalog)
+    plan = _plan(compile_measurement(expr, ctx, PureDPBudget(1)).df)
+    names = [re.sub(r"^[\s:+-]*", "", line).split(" ")[0] for line in plan.splitlines()]
+    found = [n for n in names if re.search(r"Python|InPandas|InArrow", n)]
+    assert len(found) == nodes, plan
+
+
 def test_simhash_plan_is_arrow_batched_no_shuffle(li_sess, spark):
     # The md5 simhash is an Arrow-batched kernel (the Catalyst explode +
     # 60-accumulator aggregate measured ~6x slower, see simhash

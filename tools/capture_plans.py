@@ -30,22 +30,9 @@ def main() -> None:
     )
     os.makedirs(out_dir, exist_ok=True)
 
-    from pyspark.sql import SparkSession
+    from bench import bench_session
 
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-        )
-        .appName("capture-plans")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench_session("capture-plans", sf_dir)
 
     import __spark_entry__ as entry
 

@@ -24,39 +24,21 @@ sys.path.insert(0, HERE)
 def main() -> None:
     key = os.environ["DIAG_KEY"]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     evdir = tempfile.mkdtemp(prefix="tas_evlog_")
 
-    from pyspark.sql import SparkSession
+    from bench import bench_session
 
-    disk_bytes = 0
-    for root, _d, files in os.walk(sf_dir):
-        for f in files:
-            disk_bytes += os.path.getsize(os.path.join(root, f))
-    auto_mem = f"{min(64, max(16, (disk_bytes * 5) >> 30))}g"
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("tas-diag")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", auto_mem))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", evdir)
-        .getOrCreate()
+    spark = bench_session(
+        "tas-diag",
+        sf_dir,
+        **{
+            "spark.eventLog.enabled": "true",
+            "spark.eventLog.dir": evdir,
+            # one plain-text file, not Spark 4's rolling zstd directory
+            "spark.eventLog.rolling.enabled": "false",
+            "spark.eventLog.compress": "false",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
-    env_parts = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-    if env_parts:
-        spark.conf.set("spark.sql.shuffle.partitions", env_parts)
-    else:
-        from tumult_analytics_spark.utils import configure_shuffle_partitions
-
-        configure_shuffle_partitions(spark, [sf_dir], floor=max(int(cpus), 8))
 
     import __spark_entry__ as entry
 

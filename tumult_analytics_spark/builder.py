@@ -446,16 +446,8 @@ class GroupedQueryBuilder:
         high: float,
         name: Optional[str] = None,
     ) -> Query:
-        return Query(
-            E.GroupByQuantile(
-                self._expr,
-                self._keys,
-                measure_column=column,
-                quantile=quantile,
-                low=float(low),
-                high=float(high),
-                output_column=name or f"{column}_quantile({quantile})",
-            )
+        return self.quantiles(
+            column, [quantile], low, high, [name or f"{column}_quantile({quantile})"]
         )
 
     def quantiles(
@@ -468,7 +460,8 @@ class GroupedQueryBuilder:
     ) -> Query:
         """Multiple quantiles of one column in a SINGLE histogram pass
         (this engine's extension; the reference API computes one quantile
-        per query). The budget splits evenly across the quantiles, so
+        per query, and ``quantile`` here is this query with one
+        quantile). The budget splits evenly across the quantiles, so
         ``quantiles(c, [0.25, 0.5, 0.75])`` costs one scan and the same
         total epsilon as three sequential ``quantile`` queries — but a
         third of the epsilon (and noise budget) per quantile."""

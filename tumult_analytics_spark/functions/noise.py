@@ -40,6 +40,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..utils import col_named
+
 
 class NoiseMechanism(Enum):
     GEOMETRIC = "geometric"
@@ -165,5 +167,5 @@ def add_noise(
     for col, (mechanism, scale) in noise.items():
         draw = noise_column(mechanism, scale)
         if draw is not None:
-            noisy[col] = F.col(col) + draw
+            noisy[col] = col_named(col) + draw
     return df.withColumns(noisy) if noisy else df

@@ -11,14 +11,17 @@ Transformation/Measurement objects) with one Spark-first compile pass:
 - aggregations compile to: [semi-join filter to keyset] -> groupBy().agg()
   (map-side partial aggregation) -> broadcast join with the keyset ->
   noisy-zero fill -> one noise projection (``_noisy_release``, shared by
-  every additive measurement). The base-table scan is the only big
+  every additive measurement). Quantiles and get_bounds instead collect
+  each group's bin counts before the keyset join and run a picker after
+  it (``_histogram_release``). The base-table scan is the only big
   shuffle; the keyset side is always broadcast.
 
 Scale notes (100 TB): the semi-join against the keyset is a broadcast
 hash join that prunes rows *before* the aggregation shuffle; the
 aggregation itself benefits from partial (map-side) aggregation; the final
 keyset join touches only #groups rows. Python UDFs appear solely in
-user-supplied map/flat_map and in the noise stage (O(#groups) rows).
+user-supplied map/flat_map, in the noise stage and in the histogram
+pickers (O(#groups) rows).
 """
 
 from __future__ import annotations
@@ -28,6 +31,7 @@ from dataclasses import dataclass, field as dc_field, replace as dc_replace
 from fractions import Fraction
 from typing import Any, Callable, Dict, Iterator, List, NamedTuple, Optional, Sequence, Tuple, Union
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -62,7 +66,7 @@ from ..schema import (
     Schema,
     schema_from_spark,
 )
-from ..utils import disambiguate_columns, nullsafe_equi_join
+from ..utils import col_named, disambiguate_columns, nullsafe_equi_join
 from . import expr as E
 
 # ---------------------------------------------------------------------------
@@ -457,8 +461,6 @@ def compile_flat_map(
     out_cols = list(out_schema.columns)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
         for pdf in batches:
             if vectorized:
                 # Snapshot the augment-carried input columns before f
@@ -542,8 +544,6 @@ def compile_flat_map_by_id(
     spans tasks. Same groups, same rows — within-group row order is
     unspecified in both shapes (distributed shuffle order).
     """
-    import numpy as np
-
     out_schema = _restrict_schema(out_schema, keep)
     spark_schema = _spark_schema_for(out_schema)
     out_cols = list(out_schema.columns)
@@ -778,7 +778,6 @@ def measurement_required_columns(expr: E.QueryExpr) -> Optional[frozenset]:
             E.GroupByBoundedAverage,
             E.GroupByBoundedVariance,
             E.GroupByBoundedStdev,
-            E.GroupByQuantile,
             E.GroupByQuantiles,
         ),
     ):
@@ -1281,17 +1280,10 @@ def _keyset_filter(df: DataFrame, keys: KeySet) -> DataFrame:
     est = keys.estimated_size()
     if est is not None and est > KEYSET_BROADCAST_LIMIT:
         return df
-    kdf = keys.dataframe()
-    if est is not None:
-        kdf = F.broadcast(kdf)
     # unknown size (DataFrame-backed keyset): plain semi-join, AQE decides.
-    tmp = {c: f"__ks_{c}" for c in cols}
-    k = kdf.withColumnsRenamed(tmp)
-    cond = None
-    for c in cols:
-        piece = F.col(c).eqNullSafe(F.col(tmp[c]))
-        cond = piece if cond is None else cond & piece
-    return df.join(k, on=cond, how="left_semi")
+    return nullsafe_equi_join(
+        df, keys.dataframe(), cols, how="left_semi", broadcast_right=est is not None
+    )
 
 
 def _keyset_attach(
@@ -1316,7 +1308,7 @@ def _keyset_attach(
             how="left",
             broadcast_right=_keyset_broadcastable(keys),
         )
-    fills = {c: F.coalesce(F.col(c), F.lit(v)) for c, v in fill.items()}
+    fills = {c: F.coalesce(col_named(c), F.lit(v)) for c, v in fill.items()}
     return agg.withColumns(fills) if fills else agg
 
 
@@ -1358,7 +1350,7 @@ def compile_measurement(
     if isinstance(expr, E.SuppressAggregates):
         inner = compile_measurement(expr.child, ctx, budget)
         return MeasurementResult(
-            inner.df.filter(F.col(expr.column) >= expr.threshold),
+            inner.df.filter(col_named(expr.column) >= expr.threshold),
             inner.noise_infos,
         )
 
@@ -1382,8 +1374,6 @@ def compile_measurement(
         return _compile_average(expr, ctx, bspec)
     if isinstance(expr, (E.GroupByBoundedVariance, E.GroupByBoundedStdev)):
         return _compile_variance(expr, ctx, bspec)
-    if isinstance(expr, E.GroupByQuantile):
-        return _compile_quantile(expr, ctx, bspec)
     if isinstance(expr, E.GroupByQuantiles):
         return _compile_quantiles(expr, ctx, bspec)
     if isinstance(expr, E.GetBounds):
@@ -1435,7 +1425,7 @@ def _noisy_release(
         noise[c] = (mech, noise_scale(mech, share, prep.l1 * sens, prep.l2 * sens))
     res = add_noise(res, noise).withColumns(
         {
-            c: F.col(c).cast("long" if i else "double")
+            c: col_named(c).cast("long" if i else "double")
             for c, (_, _, i) in moments.items()
         }
     )
@@ -1552,23 +1542,56 @@ def _compile_variance(
 #: Number of histogram bins the DP quantile uses per group.
 QUANTILE_BINS = 512
 
+#: Picks a group's released values from its histogram: (bins, counts)
+#: -> one value per output field. Bins are unique within a group; a
+#: keyset group with no data gets empty arrays.
+Picker = Callable[[np.ndarray, np.ndarray], Sequence[Any]]
 
-def _compile_quantile(
-    expr: E.GroupByQuantile, ctx: CompileContext, bspec: BudgetSpec
-) -> MeasurementResult:
-    """Single-quantile wrapper over :func:`_compile_quantiles` (one
-    histogram pass, one exponential mechanism — identical semantics and
-    budget to the reference's GroupByQuantile)."""
-    multi = E.GroupByQuantiles(
-        child=expr.child,
-        groupby_keys=expr.groupby_keys,
-        measure_column=expr.measure_column,
-        quantiles=(float(expr.quantile),),
-        low=expr.low,
-        high=expr.high,
-        output_columns=(expr.output_column,),
+
+def _histogram_release(
+    prep: _Prepared,
+    bin_col: F.Column,
+    count_noise: Optional[Tuple[NoiseMechanism, float]],
+    picker: Picker,
+    outputs: T.StructType,
+) -> DataFrame:
+    """The release path of every histogram measurement: count per (group,
+    bin) -> optional noise on each count -> each group's bins and counts
+    collected in one groupBy().agg -> keyset attach -> ``picker`` per
+    group in one nondeterministic Arrow UDF.
+
+    groupBy().agg gives one row even over no input rows, and the attach
+    gives every keyset group a row, so a group with no data is released
+    by the picker's own mechanism (noise after join), never by a fill."""
+    counts = _groupby(
+        prep.df.withColumn("__bin__", bin_col), [*prep.gcols, "__bin__"]
+    ).agg(F.count(F.lit(1)).alias("__c__"))
+    if count_noise is not None:
+        counts = add_noise(counts, {"__c__": count_noise})
+    hist = _groupby(counts, prep.gcols).agg(
+        F.collect_list("__bin__").alias("__bins__"),
+        F.collect_list("__c__").alias("__cs__"),
     )
-    return _compile_quantiles(multi, ctx, bspec)
+    hist = _keyset_attach(hist, prep.keys, {})
+    names = outputs.fieldNames()
+
+    def pick(bins: pd.Series, cs: pd.Series) -> pd.DataFrame:
+        none = np.empty(0)
+        rows = [
+            picker(
+                np.asarray(none if b is None else b, dtype=np.int64),
+                np.asarray(none if c is None else c, dtype=np.float64),
+            )
+            for b, c in zip(bins, cs)
+        ]
+        return pd.DataFrame(rows, columns=names)
+
+    udf = F.pandas_udf(pick, outputs).asNondeterministic()
+    picked = hist.withColumn("__out__", udf("__bins__", "__cs__"))
+    return picked.select(
+        *(col_named(c) for c in prep.gcols),
+        *(F.col("__out__").getField(n).alias(n) for n in names),
+    )
 
 
 def _compile_quantiles(
@@ -1576,36 +1599,30 @@ def _compile_quantiles(
 ) -> MeasurementResult:
     """Exponential-mechanism quantile(s) over ONE fixed per-group histogram.
 
-    Spark plan: clamp -> bin (Catalyst arithmetic) -> groupBy(group, bin)
-    count (one shuffle, map-side combined) -> applyInPandas per group over
-    <=QUANTILE_BINS rows to run the exponential mechanism once per
-    requested quantile. The histogram pass — the only part that touches
-    the data — is shared by all m quantiles; the total budget splits
-    evenly across the m mechanisms (sequential composition). Scales to
-    any number of groups; never collects raw values.
+    Clamp -> bin (Catalyst arithmetic) -> :func:`_histogram_release`,
+    whose picker runs the exponential mechanism once per requested
+    quantile over <=QUANTILE_BINS bins. The histogram pass — the only part
+    that touches the data — is shared by all m quantiles; the total
+    budget splits evenly across the m mechanisms (sequential
+    composition). Scales to any number of groups; never collects raw
+    values.
 
     With an infinite budget this deterministically returns the midpoint of
     the best-utility bin per quantile (reference returns a point inside
     the optimal interval; the bin width bounds the difference).
     """
-    t, df, gcols, keys, l1, l2 = _prep(expr, ctx, bspec)
-    outs = list(expr.output_columns)
+    prep = _prep(expr, ctx, bspec)
     qs = [float(q) for q in expr.quantiles]
     m = len(qs)
     lo, hi = float(expr.low), float(expr.high)
     nb = QUANTILE_BINS
     width = (hi - lo) / nb
-    cs = t.schema
-    ctype = cs[expr.measure_column].column_type
+    ctype = prep.t.schema[expr.measure_column].column_type
     clamped = _clamp(F.col(expr.measure_column), ctype, expr.low, expr.high).cast(
         "double"
     )
     bin_col = F.least(
         F.floor((clamped - F.lit(lo)) / F.lit(width)).cast("int"), F.lit(nb - 1)
-    )
-    binned = df.withColumn("__bin__", bin_col)
-    counts = _groupby(binned, [*gcols, "__bin__"]).agg(
-        F.count(F.lit(1)).alias("__c__")
     )
     total_eps = float("inf") if bspec.infinite else (
         bspec.epsilon if bspec.kind in ("puredp", "approxdp") else None
@@ -1619,7 +1636,7 @@ def _compile_quantiles(
         eps = math.sqrt(8.0 * rho_each) if rho_each > 0 else 0.0
     else:
         eps = total_eps if not math.isfinite(total_eps) else total_eps / m
-    sens = l1 if bspec.kind != "zcdp" else l2
+    sens = prep.l1 if bspec.kind != "zcdp" else prep.l2
     # Per-row utility sensitivity of u_i = -|cum_i + c_i/2 - q*n|. The
     # target q*n is data-dependent, so adding/removing one row moves BOTH
     # the rank term and the target; by case on where the row lands
@@ -1631,23 +1648,13 @@ def _compile_quantiles(
     # utility sensitivity is du = sens * max(q, 1-q), and the exponential
     # mechanism scores with eps/(2*du).
 
-    out_fields = [(c, t.df.schema[c].dataType) for c in gcols]
-    out_schema = T.StructType(
-        [T.StructField(c, dt, True) for c, dt in out_fields]
-        + [T.StructField(o, T.DoubleType(), True) for o in outs]
-    )
-
-    import numpy as np
-
-    def em_quantiles(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+    def em_quantiles(bins: np.ndarray, counts: np.ndarray) -> List[float]:
         counts_arr = np.zeros(nb, dtype=np.float64)
-        for b, c in zip(pdf["__bin__"], pdf["__c__"]):
-            if b is not None and 0 <= int(b) < nb:
-                counts_arr[int(b)] = float(c)
+        counts_arr[bins] = counts
         n = counts_arr.sum()
         cum = np.concatenate([[0.0], np.cumsum(counts_arr)])  # cum[i] = below bin i
-        row = {c: v for (c, _), v in zip(out_fields, key)}
-        for q, out in zip(qs, outs):
+        out = []
+        for q in qs:
             target = q * n
             # Utility of bin i: -|rank error| at the bin boundary region.
             util = -np.abs(cum[:-1] + counts_arr / 2.0 - target)
@@ -1660,18 +1667,13 @@ def _compile_quantiles(
                 scores = (eps / (2.0 * max(sens * du_per_row, 1e-12))) * util
                 g = np.random.default_rng().gumbel(size=nb)
                 idx = int(np.argmax(scores + g))
-            row[out] = float(lo + (idx + 0.5) * width)
-        return pd.DataFrame([row], columns=[c for c, _ in out_fields] + outs)
+            out.append(float(lo + (idx + 0.5) * width))
+        return out
 
-    if gcols:
-        per_group = counts.groupBy(*gcols).applyInPandas(em_quantiles, out_schema)
-        # Missing groups: empty data -> all bins tie at utility 0 -> argmax
-        # picks bin 0 -> its midpoint.
-        res = _keyset_attach(per_group, keys, {o: lo + 0.5 * width for o in outs})
-    else:
-        pdf = counts.toPandas()
-        res_pdf = em_quantiles((), pdf)
-        res = df.sparkSession.createDataFrame(res_pdf, out_schema)
+    outputs = T.StructType(
+        [T.StructField(o, T.DoubleType(), True) for o in expr.output_columns]
+    )
+    res = _histogram_release(prep, bin_col, None, em_quantiles, outputs)
     infos = [
         NoiseInfo(NoiseMechanism.EXPONENTIAL, 0.0 if bspec.infinite else eps)
         for _ in qs
@@ -1726,32 +1728,19 @@ def _compile_get_bounds(
     """DP clamping-bound estimate via a noisy histogram over power-of-two
     magnitude bins; returns the smallest +-2^k covering ~95% of rows
     (reference behavior: +-128 for data 0..99)."""
-    t, df, gcols, keys, l1, l2 = _prep(expr, ctx, bspec)
-    m = F.col(expr.measure_column).cast("double")
+    prep = _prep(expr, ctx, bspec)
+    mag = F.abs(F.col(expr.measure_column).cast("double"))
     # bin = ceil(log2(|x|)) for |x| > 1, else 0; sign-agnostic magnitude bin.
-    mag = F.abs(m)
     binexp = F.when(mag <= 1.0, F.lit(0)).otherwise(
         F.ceil(F.log2(mag)).cast("int")
     )
-    binned = df.withColumn("__b__", binexp)
-    counts = _groupby(binned, [*gcols, "__b__"]).agg(F.count(F.lit(1)).alias("__c__"))
     eps = bspec.epsilon if bspec.kind != "zcdp" else math.sqrt(8.0 * bspec.rho)
-    scale = 0.0 if bspec.infinite else (2.0 * l1 / eps if eps > 0 else 0.0)
-    counts = add_noise(counts, {"__c__": (NoiseMechanism.GEOMETRIC, scale)})
-    lb, ub = expr.lower_bound_column, expr.upper_bound_column
-
-    out_fields = [(c, t.df.schema[c].dataType) for c in gcols]
-    mtype = t.df.schema[expr.measure_column].dataType
-    out_schema = T.StructType(
-        [T.StructField(c, dt, True) for c, dt in out_fields]
-        + [T.StructField(lb, mtype, True), T.StructField(ub, mtype, True)]
-    )
+    scale = 0.0 if bspec.infinite else (2.0 * prep.l1 / eps if eps > 0 else 0.0)
+    mtype = prep.t.df.schema[expr.measure_column].dataType
     is_int = isinstance(mtype, (T.LongType, T.IntegerType))
 
-    def pick_bound(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        pairs = sorted(
-            (int(b), float(c)) for b, c in zip(pdf["__b__"], pdf["__c__"])
-        )
+    def pick_bound(bins: np.ndarray, counts: np.ndarray) -> Tuple[Any, Any]:
+        pairs = sorted(zip(bins.tolist(), counts.tolist()))
         total = sum(max(c, 0.0) for _, c in pairs)
         bound = 1.0
         if total > 0:
@@ -1762,17 +1751,17 @@ def _compile_get_bounds(
                 if acc / total >= 0.95:
                     break
         val = int(bound) if is_int else float(bound)
-        row = {c: v for (c, _), v in zip(out_fields, key)}
-        row[lb] = -val
-        row[ub] = val
-        return pd.DataFrame([row], columns=[c for c, _ in out_fields] + [lb, ub])
+        return -val, val
 
-    if gcols:
-        per_group = counts.groupBy(*gcols).applyInPandas(pick_bound, out_schema)
-        res = _keyset_attach(per_group, keys, {})
-    else:
-        pdf = counts.toPandas()
-        res = df.sparkSession.createDataFrame(pick_bound((), pdf), out_schema)
+    outputs = T.StructType(
+        [
+            T.StructField(expr.lower_bound_column, mtype, True),
+            T.StructField(expr.upper_bound_column, mtype, True),
+        ]
+    )
+    res = _histogram_release(
+        prep, binexp, (NoiseMechanism.GEOMETRIC, scale), pick_bound, outputs
+    )
     return MeasurementResult(res, [NoiseInfo(NoiseMechanism.GEOMETRIC, scale)])
 
 

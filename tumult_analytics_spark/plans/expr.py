@@ -710,42 +710,15 @@ class GroupByCountDistinct(QueryExpr):
 
 
 @dataclass(frozen=True)
-class GroupByQuantile(QueryExpr):
-    child: QueryExpr
-    groupby_keys: GroupbyKeys
-    measure_column: str
-    quantile: float
-    low: float
-    high: float
-    output_column: str = ""
-
-    def __post_init__(self):
-        _check_bounds(self.low, self.high)
-        if not (0.0 <= self.quantile <= 1.0):
-            raise ValueError("Quantile must be between 0 and 1")
-
-    def schema(self, catalog: Catalog) -> Schema:
-        cs = self.child.schema(catalog)
-        _check_groupby(cs, self.groupby_keys)
-        _check_measure(cs, self.measure_column, self.low, self.high)
-        return _groupby_schema(
-            self.groupby_keys,
-            {self.output_column: ColumnDescriptor(ColumnType.DECIMAL)},
-            cs,
-        )
-
-
-@dataclass(frozen=True)
 class GroupByQuantiles(QueryExpr):
-    """Multi-quantile extension (this engine's addition; the reference's
-    API exposes only one quantile per query, see reference
-    src/tmlt/analytics/_query_expr.py GroupByQuantile): m quantiles of one
-    measure column computed from a SINGLE clamp->bin->count histogram
-    pass. The privacy budget splits evenly across the m exponential
-    mechanisms (sequential composition over the same per-group
-    histogram), so ``quantiles(col, [q])`` costs exactly what
-    ``quantile(col, q)`` costs and m quantiles cost one scan instead of
-    m scans."""
+    """m quantiles of one measure column computed from a SINGLE
+    clamp->bin->count histogram pass (this engine's extension; the
+    reference's API exposes only one quantile per query, see reference
+    src/tmlt/analytics/_query_expr.py GroupByQuantile). ``quantile``,
+    ``median``, ``min`` and ``max`` build this node with m = 1. The
+    privacy budget splits evenly across the m exponential mechanisms
+    (sequential composition over the same per-group histogram), so m
+    quantiles cost one scan instead of m scans."""
 
     child: QueryExpr
     groupby_keys: GroupbyKeys
@@ -915,7 +888,6 @@ TRANSFORMATION_NODES = (
 MEASUREMENT_NODES = (
     GroupByCount,
     GroupByCountDistinct,
-    GroupByQuantile,
     GroupByQuantiles,
     GroupByBoundedSum,
     GroupByBoundedAverage,

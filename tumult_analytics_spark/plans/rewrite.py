@@ -108,7 +108,6 @@ def rewrite(expr: E.QueryExpr, catalog: Mapping[str, Schema]) -> E.QueryExpr:
             E.GroupByBoundedAverage,
             E.GroupByBoundedVariance,
             E.GroupByBoundedStdev,
-            E.GroupByQuantile,
             E.GroupByQuantiles,
         ),
     ):

@@ -57,6 +57,13 @@ def nullsafe_anti_join(
     return left.join(r, on=cond, how="left_anti")
 
 
+def col_named(name: str) -> F.Column:
+    """The column called exactly ``name``. Quoted in backticks (inner
+    backticks doubled), so a ``.`` is part of the name rather than a
+    struct-field access, e.g. the default ``x_quantile(0.5)``."""
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
 def disambiguate_columns(
     left: DataFrame,
     right: DataFrame,
